@@ -93,10 +93,12 @@ def _write_roll(root: str, lo: int, hi: int, kind: str,
         # input whole — an all-history RAM spike per fanin merge on a
         # months-long run. Memory is now bounded by one record batch.
         # Schemas are unified up front from file FOOTERS (metadata only)
-        # and each batch cast to the union, preserving the old
-        # promote_options="default" semantics; Spark writes INT96
-        # timestamps which pyarrow surfaces as nanos — coerce to the
-        # micros Spark understands, exactly as before.
+        # and each batch projected onto the union — in its column order,
+        # absent fields as nulls — then cast, preserving the old
+        # promote_options="default" semantics (a bare cast raises once a
+        # sink's schema drifts: a missing or reordered column). Spark
+        # writes INT96 timestamps which pyarrow surfaces as nanos — coerce
+        # to the micros Spark understands, exactly as before.
         readers = [pq.ParquetFile(f) for f in part_files]
         schema = pa.unify_schemas([r.schema_arrow for r in readers],
                                   promote_options="default")
@@ -104,8 +106,12 @@ def _write_roll(root: str, lo: int, hi: int, kind: str,
                               allow_truncated_timestamps=True) as w:
             for r in readers:
                 for batch in r.iter_batches():
-                    w.write_table(
-                        pa.Table.from_batches([batch]).cast(schema))
+                    cols = [batch.column(f.name)
+                            if f.name in batch.schema.names
+                            else pa.nulls(batch.num_rows, f.type)
+                            for f in schema]
+                    w.write_table(pa.Table.from_arrays(
+                        cols, names=schema.names).cast(schema))
         for r in readers:
             r.close()
     else:

@@ -6,17 +6,30 @@ Envelope layout (all little-endian):
     0       4     magic  b"FVSK"
     4       1     format version (1)
     5       1     sketch kind (see KIND constants)
-    6       2     flags (bit 0: payload is zlib-compressed)
-    8       ...   kind-specific params + payload
+    6       2     flags (bit 0: zlib payload, read-only; bit 1: zstd payload)
+    8       ...   kind-specific params + payload; a zstd payload is preceded
+                  by its raw length (uint64), which the decoder needs
 
 The fixed magic/version/kind header follows the style of the reference's
 binary flow records (/root/reference/types/flow_event.go:93-99), which lead
-with a format byte so readers can reject unknown versions.
+with a format byte so readers can reject unknown versions. Unknown versions
+and unknown flag bits are rejected, never decoded as garbage.
 
 Compression matters at scale: a partition-local CMS partial covering a few
 thousand rows is a ~1.5 MB table of mostly zeros; with P partitions and G
-groups, the merge shuffle moves P×G of them. zlib level 1 shrinks
-near-empty tables ~20-50x for ~ms of CPU, applied only when it wins.
+groups, the merge shuffle moves P×G of them. States are written with zstd
+level 1 (pyarrow's bundled codec), applied only when it wins. zlib-flagged
+states, which earlier builds wrote, still decode; builds that predate zstd
+cannot read states written now.
+
+Measured and rejected (single core of a 4-core VM, 180 KB Bloom, 190 KB
+CMS and 16 KB HLL partials):
+- zlib level 1, the earlier writer: 2.4-30x slower than zstd-1 (4.2 vs
+  1.05 ms on a 10%-full Bloom, 6.8 vs 0.26 ms on a full one, whose output
+  the 3/4 rule then discards) and larger output on every payload;
+- lz4: 0.62 vs 1.05 ms per sparse partial Bloom, but 98 KB vs 61 KB on
+  the wire (99 vs 49 KB on the CMS partial);
+- no compression: 3-4x the bytes of each of those partials on the wire.
 """
 
 from __future__ import annotations
@@ -25,11 +38,18 @@ import struct
 import zlib
 from abc import ABC, abstractmethod
 
+import pyarrow as pa
+
 MAGIC = b"FVSK"
 VERSION = 1
 
-FLAG_ZLIB = 1
+FLAG_ZLIB = 1  # read-only: no longer written
+FLAG_ZSTD = 2
 _COMPRESS_MIN = 4096  # don't bother below this payload size
+
+_HEAD = struct.Struct("<4sBBH")
+_RAW_LEN = struct.Struct("<Q")
+_ZSTD = pa.Codec("zstd", compression_level=1)
 
 KIND_BLOOM = 1
 KIND_HLL = 2
@@ -96,12 +116,12 @@ class Sketch(ABC):
 
     def to_bytes(self) -> bytes:
         payload = self._payload_bytes()
-        flags = 0
         if len(payload) >= _COMPRESS_MIN:
-            packed = zlib.compress(payload, 1)
+            packed = _ZSTD.compress(payload, asbytes=True)
             if len(packed) < len(payload) * 3 // 4:
-                payload, flags = packed, FLAG_ZLIB
-        return struct.pack("<4sBBH", MAGIC, VERSION, self.KIND, flags) + payload
+                return (_HEAD.pack(MAGIC, VERSION, self.KIND, FLAG_ZSTD)
+                        + _RAW_LEN.pack(len(payload)) + packed)
+        return _HEAD.pack(MAGIC, VERSION, self.KIND, 0) + payload
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "Sketch":
@@ -111,45 +131,54 @@ class Sketch(ABC):
         return sk
 
 
-def payload_of(data: bytes) -> bytes:
-    """Raw (decompressed) payload of a serialized state — used by the
-    vectorized _merge_many fast paths."""
-    magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad sketch magic {magic!r}")
-    payload = bytes(memoryview(data)[8:])
-    if flags & FLAG_ZLIB:
-        payload = zlib.decompress(payload)
-    return payload
-
-
-def merge_many(states: list[bytes]) -> Sketch:
-    """Merge serialized states efficiently. Dispatches to the sketch class's
-    ``_merge_many`` fast path when it has one (Bloom/HLL/CMS reduce over
-    zero-copy buffer views — the hot path of the shuffle-merge stage),
-    else falls back to pairwise deserialize+merge."""
-    first = sketch_from_bytes(states[0])
-    if len(states) == 1:
-        return first
-    fast = getattr(type(first), "_merge_many", None)
-    if fast is not None:
-        return fast(states)
-    for b in states[1:]:
-        first.merge(sketch_from_bytes(b))
-    return first
-
-
-def sketch_from_bytes(data: bytes) -> Sketch:
-    magic, version, kind, flags = struct.unpack_from("<4sBBH", data, 0)
+def _sketch_class(data) -> tuple[type, int]:
+    """Validate a state's header → (sketch class, flags)."""
+    magic, version, kind, flags = _HEAD.unpack_from(data, 0)
     if magic != MAGIC:
         raise ValueError(f"bad sketch magic {magic!r}")
     if version != VERSION:
         raise ValueError(f"unsupported sketch version {version}")
+    if flags not in (0, FLAG_ZLIB, FLAG_ZSTD):
+        raise ValueError(f"unsupported sketch flags {flags:#06x}")
     try:
-        klass = SKETCH_REGISTRY[kind]
+        return SKETCH_REGISTRY[kind], flags
     except KeyError:
         raise ValueError(f"unknown sketch kind {kind}") from None
-    payload = memoryview(data)[8:]
-    if flags & FLAG_ZLIB:
+
+
+def _decode(data) -> tuple[type, memoryview]:
+    klass, flags = _sketch_class(data)
+    payload = memoryview(data)[_HEAD.size:]
+    if flags == FLAG_ZSTD:
+        (n,) = _RAW_LEN.unpack_from(payload, 0)
+        payload = memoryview(_ZSTD.decompress(payload[_RAW_LEN.size:],
+                                              decompressed_size=n))
+    elif flags == FLAG_ZLIB:
         payload = memoryview(zlib.decompress(payload))
+    return klass, payload
+
+
+def payload_of(data: bytes) -> memoryview:
+    """Raw (decompressed) payload of a serialized state — used by the
+    vectorized _merge_many fast paths."""
+    return _decode(data)[1]
+
+
+def merge_many(states: list[bytes]) -> Sketch:
+    """Merge serialized states efficiently. Dispatches on the first header's
+    kind to the sketch class's ``_merge_many`` fast path when it has one
+    (Bloom/HLL/CMS reduce over zero-copy buffer views — the hot path of the
+    shuffle-merge stage), else falls back to pairwise deserialize+merge."""
+    klass, _ = _sketch_class(states[0])
+    fast = getattr(klass, "_merge_many", None)
+    if fast is None or len(states) == 1:
+        first = sketch_from_bytes(states[0])
+        for b in states[1:]:
+            first.merge(sketch_from_bytes(b))
+        return first
+    return fast(states)
+
+
+def sketch_from_bytes(data: bytes) -> Sketch:
+    klass, payload = _decode(data)
     return klass._from_payload(payload)

@@ -23,7 +23,7 @@ _HEADER = struct.Struct("<IIqqB")  # depth d, width w, seed (signed 64), total N
 
 # On-wire cell dtype: a partition-local partial over ~15k rows holds counts
 # ≤ 15k, so shipping the dense d×w table as int64 wastes 4-8x bytes AND
-# dominates the merge stage in zlib time (dense int64 tables compress
+# dominates the merge stage in compression time (dense int64 tables compress
 # slowly and poorly). The payload narrows to the smallest unsigned dtype
 # that holds table.max(); in-memory stays int64. Codes = itemsize.
 _DTYPE_BY_CODE = {1: np.uint8, 2: np.uint16, 4: np.uint32, 8: np.int64}

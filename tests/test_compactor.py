@@ -226,3 +226,38 @@ class TestStreamingMerges:
         out = compact_sink_dir(root, "text", keep_last=0)
         assert out["rolled_batches"] == 3
         assert all_text_lines(root) == before
+
+
+class TestCompactSchemaDrift:
+    """A sink whose schema changes between batches must keep rolling: the
+    roll projects each batch onto the unified schema before the cast."""
+
+    def _batches(self, root, tables):
+        for i, t in enumerate(tables):
+            d = os.path.join(root, f"batch={i}")
+            os.makedirs(d)
+            pq.write_table(t, os.path.join(d, "part-0.parquet"))
+            open(os.path.join(d, "_SUCCESS"), "w").close()
+
+    def test_missing_column_filled_with_nulls(self, tmp_path):
+        root = str(tmp_path)
+        self._batches(root, [pa.table({"v": [1, 2], "w": ["a", "b"]}),
+                             pa.table({"v": [3]})])
+        out = compact_sink_dir(root, "parquet", keep_last=0)
+        assert out["rolled_batches"] == 2
+        t = pq.read_table(os.path.join(root, "batch=0-1",
+                                       "part-roll0.parquet"))
+        assert t.column_names == ["v", "w"]
+        assert t.column("v").to_pylist() == [1, 2, 3]
+        assert t.column("w").to_pylist() == ["a", "b", None]
+
+    def test_reordered_columns(self, tmp_path):
+        root = str(tmp_path)
+        self._batches(root, [pa.table({"v": [1], "w": ["a"]}),
+                             pa.table({"w": ["b"], "v": [2]})])
+        out = compact_sink_dir(root, "parquet", keep_last=0)
+        assert out["rolled_batches"] == 2
+        t = pq.read_table(os.path.join(root, "batch=0-1",
+                                       "part-roll0.parquet"))
+        assert t.column_names == ["v", "w"]
+        assert t.to_pylist() == [{"v": 1, "w": "a"}, {"v": 2, "w": "b"}]
