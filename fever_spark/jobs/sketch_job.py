@@ -42,7 +42,7 @@ class SketchJob:
     keys: list[str]
     specs: list[SketchSpec]
     files_per_chunk: int = 8
-    salt: int | None = None
+    salt: int = 1
     job_id: str = "sketch_job"
     # optional per-chunk derivation (add window/host columns, explode
     # tokens, ...) applied between read and build; must be deterministic —

@@ -1,10 +1,22 @@
 """Two-level salted sketch merge: stage 2 of the combine.
 
-The explicit "partition-local update, then skew-aware salted shuffle merge"
-the north_rule demands. Fever's single-process analog is the associative
-partial-count merge at /root/reference/processing/unicorn_aggregator.go:145-155;
-at cluster scale a plain ``groupBy(keys)`` merge puts every partial state for
-a hot key (Zipfian hosts) on ONE reducer. We shuffle twice instead:
+Fever's single-process analog is the associative partial-count merge at
+/root/reference/processing/unicorn_aggregator.go:145-155. At cluster scale
+the merge moves states, not rows: build_sketches emits one partial per
+(partition, key), plus memory-budget flushes that land on the same
+partition, so a key has at most ~P partials however skewed its rows are,
+P being the build frame's partition count. The default is therefore one
+shuffle:
+
+  groupBy(keys, sketch)  — one reducer merges every partial of a key.
+
+With 4 build partitions the old salted default merged only 2 states per key
+at its first level while paying a second shuffle of every state; one level
+instead took the traced page-sketch job (perfbench, seed 7, 4-core VM) from
+1217 to 844 merge shuffle records, 24.7 to 12.9 MB and 1.82 to 0.94 s.
+
+For very wide build frames (thousands of partitions, so thousands of
+partials per hot key) pass ``salt=S`` to shuffle twice instead:
 
   level 1: groupBy(keys, sketch, salt)  — salt = map-partition-id % S spreads
            a hot key's partials over S reducers; each merges ~P/S states.
@@ -13,16 +25,6 @@ a hot key (Zipfian hosts) on ONE reducer. We shuffle twice instead:
 Shuffle volume at both levels is O(groups × S × state_size) — independent of
 input row count. For the final single-sketch-per-spec case (keys == []), the
 same tree applies with salt as the only level-1 key.
-
-The salt is the map partition id, so a key's partials can spread over at
-most P level-1 reducers, P being the input's partition count; build_sketches
-emits one partial per (partition, key), plus memory-budget flushes that land
-on the same partition. Up to MAX_FAN_IN partitions the default is therefore
-salt=1: one reducer per key merges all of its partials in a single shuffle.
-With 4 build partitions the salted level merged only 2 states per key while
-paying a second shuffle of every state. One level instead took the traced
-page-sketch job (perfbench, seed 7, 4-core VM) from 1217 to 844 merge
-shuffle records, 24.7 to 12.9 MB and 1.82 to 0.94 s.
 
 Because every sketch merge is associative (+ commutative for the lattice
 sketches), the result is invariant to S and to input partitioning — tested
@@ -40,23 +42,6 @@ from pyspark.sql import functions as F
 from fever_spark.sketch.base import merge_many, sketch_from_bytes
 
 _SALT = "__fvs_salt"
-
-# Largest input partition count merged without the salted level: one
-# reducer then merges up to this many partials of a key (more with flushes).
-MAX_FAN_IN = 64
-
-
-def _map_partitions(df: DataFrame) -> int | None:
-    """Partition count of ``df``'s physical plan, or None when the plan
-    holds a shuffle. AQE builds such a plan's RDD by running its query
-    stages (and ``df.rdd`` did: one job per call), so reading the count
-    would run the upstream shuffle. Without one, reading it costs ~50 ms
-    of planning and file splitting on a 4-core VM, the same as
-    ``df.rdd.getNumPartitions()``."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.toString():
-        return None
-    return plan.execute().getNumPartitions()
 
 
 def _merge_states(states: pd.Series) -> bytes:
@@ -78,27 +63,13 @@ def _merge_group_fn(out_cols: list[str]):
 
 
 def two_level_merge(sketch_df: DataFrame, keys: list[str],
-                    salt: int | None = None) -> DataFrame:
+                    salt: int = 1) -> DataFrame:
     """Merge per-partition sketch rows down to one row per (keys, sketch).
 
-    The default ``salt`` is 1 (a single shuffle) when the input has at most
-    MAX_FAN_IN partitions, and otherwise spreads each key over up to 8
-    level-1 reducers; a frame behind a shuffle keeps the salted default,
-    since its partition count is not known without running that shuffle.
+    ``salt=1`` (the default) merges in one shuffle; ``salt=S`` adds a
+    level that spreads each key's partials over S reducers first, for
+    build frames with very many partitions.
     """
-    if salt is None:
-        p = _map_partitions(sketch_df)
-        if p is not None and p <= MAX_FAN_IN:
-            salt = 1
-        else:
-            # level-1 output volume is O(groups x salt x state_size): salt
-            # only needs to spread the per-key partial count (≈ input
-            # partitions) across reducers, so cap the default — at salt=16
-            # a 1.5MB CMS state costs 16x groups x 1.5MB of intermediate
-            # shuffle for no extra skew protection over salt=8. Pass salt
-            # explicitly for pathological keys.
-            salt = max(2, min(8, sketch_df.sparkSession.sparkContext
-                              .defaultParallelism // 2))
     keys = list(keys)
     non_salt = [f.name for f in sketch_df.schema.fields if f.name != _SALT]
     out_fields = ", ".join(

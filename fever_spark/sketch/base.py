@@ -8,12 +8,18 @@ Envelope layout (all little-endian):
     5       1     sketch kind (see KIND constants)
     6       2     flags (bit 0: zlib payload, read-only; bit 1: zstd payload)
     8       ...   kind-specific params + payload; a zstd payload is preceded
-                  by its raw length (uint64), which the decoder needs
+                  by its raw length (uint64), which the decoder needs, and
+                  the CRC-32 of the raw payload (uint32)
 
 The fixed magic/version/kind header follows the style of the reference's
 binary flow records (/root/reference/types/flow_event.go:93-99), which lead
 with a format byte so readers can reject unknown versions. Unknown versions
-and unknown flag bits are rejected, never decoded as garbage.
+and unknown flag bits are rejected, never decoded as garbage; so are
+damaged payloads. Arrow writes zstd frames without a checksum, so the
+envelope carries a CRC-32 of the raw payload (zlib's stream held an
+adler32). It costs ~50 us on a 180 KB Bloom partial, against ~0.9 ms to
+compress it and ~0.27 ms to decompress it. A raw length above zstd's
+largest possible ratio is rejected before anything is allocated.
 
 Compression matters at scale: a partition-local CMS partial covering a few
 thousand rows is a ~1.5 MB table of mostly zeros; with P partitions and G
@@ -48,8 +54,11 @@ FLAG_ZSTD = 2
 _COMPRESS_MIN = 4096  # don't bother below this payload size
 
 _HEAD = struct.Struct("<4sBBH")
-_RAW_LEN = struct.Struct("<Q")
+_ZSTD_HEAD = struct.Struct("<QI")  # raw length, CRC-32 of the raw payload
 _ZSTD = pa.Codec("zstd", compression_level=1)
+# zstd cannot beat this ratio: every block of at most 128 KiB of output
+# takes at least 4 bytes of frame (an RLE block).
+_ZSTD_MAX_RATIO = 32768
 
 KIND_BLOOM = 1
 KIND_HLL = 2
@@ -120,7 +129,8 @@ class Sketch(ABC):
             packed = _ZSTD.compress(payload, asbytes=True)
             if len(packed) < len(payload) * 3 // 4:
                 return (_HEAD.pack(MAGIC, VERSION, self.KIND, FLAG_ZSTD)
-                        + _RAW_LEN.pack(len(payload)) + packed)
+                        + _ZSTD_HEAD.pack(len(payload), zlib.crc32(payload))
+                        + packed)
         return _HEAD.pack(MAGIC, VERSION, self.KIND, 0) + payload
 
     @classmethod
@@ -150,11 +160,23 @@ def _decode(data) -> tuple[type, memoryview]:
     klass, flags = _sketch_class(data)
     payload = memoryview(data)[_HEAD.size:]
     if flags == FLAG_ZSTD:
-        (n,) = _RAW_LEN.unpack_from(payload, 0)
-        payload = memoryview(_ZSTD.decompress(payload[_RAW_LEN.size:],
-                                              decompressed_size=n))
+        n, crc = _ZSTD_HEAD.unpack_from(payload, 0)
+        packed = payload[_ZSTD_HEAD.size:]
+        if n > _ZSTD_MAX_RATIO * len(packed):
+            raise ValueError(f"corrupt sketch state: raw length {n} for "
+                             f"{len(packed)} compressed bytes")
+        try:
+            payload = _ZSTD.decompress(packed, decompressed_size=n)
+        except OSError as e:
+            raise ValueError(f"corrupt sketch state: {e}") from None
+        if zlib.crc32(payload) != crc:
+            raise ValueError("corrupt sketch state: checksum mismatch")
+        payload = memoryview(payload)
     elif flags == FLAG_ZLIB:
-        payload = memoryview(zlib.decompress(payload))
+        try:
+            payload = memoryview(zlib.decompress(payload))
+        except zlib.error as e:
+            raise ValueError(f"corrupt sketch state: {e}") from None
     return klass, payload
 
 

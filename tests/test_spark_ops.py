@@ -390,10 +390,9 @@ class TestNonCanonicalMergeFallback:
             assert all(bytes(r["state"]) == canon[r["g"]] for r in rows)
 
 
-class TestDefaultSaltFromPartitions:
-    """The default salt follows the build frame's partition count P: up to
-    MAX_FAN_IN one shuffle merges every partial of a key; above it the
-    salted two-shuffle tree runs. Both give byte-identical lattice states."""
+class TestDefaultSingleShuffleMerge:
+    """The default merge (salt=1) is one shuffle; an explicit salt adds the
+    salted level. Both give byte-identical lattice states."""
 
     specs = [
         SketchSpec("users", "hll", "v", {"p": 10}),
@@ -406,37 +405,16 @@ class TestDefaultSaltFromPartitions:
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("Exchange hashpartitioning")
 
-    def merged(self, spark, partitions):
-        from fever_spark.ops.merge import _map_partitions
-
-        df = spark.range(0, 20_000, 1, numPartitions=partitions).select(
+    def test_default_and_salted_plans_agree(self, spark):
+        df = spark.range(0, 20_000, 1, numPartitions=16).select(
             (F.col("id") % 5).alias("g"),
             (F.col("id") % 3001).cast("string").alias("v"))
         built = build_sketches(df, ["g"], self.specs)
-        assert _map_partitions(built) == partitions
-        return two_level_merge(built, ["g"])
-
-    def test_small_and_large_partition_counts(self, spark):
-        from fever_spark.ops.merge import MAX_FAN_IN
-
-        small = self.merged(spark, 4)
-        large = self.merged(spark, MAX_FAN_IN + 1)
-        assert self.exchanges(small) == 1
-        assert self.exchanges(large) == 2
+        default = two_level_merge(built, ["g"])
+        salted = two_level_merge(built, ["g"], salt=8)
+        assert self.exchanges(default) == 1
+        assert self.exchanges(salted) == 2
         states = [{(r["g"], r["sketch"]): bytes(r["state"])
-                   for r in m.collect()} for m in (small, large)]
+                   for r in m.collect()} for m in (default, salted)]
         assert len(states[0]) == 5 * len(self.specs)
         assert states[0] == states[1]
-
-    def test_frame_behind_a_shuffle_keeps_the_salted_default(self, spark):
-        from fever_spark.ops.merge import _map_partitions
-
-        df = spark.range(0, 2000).select(
-            (F.col("id") % 5).alias("g"), F.col("id").cast("string").alias("v"))
-        built = build_sketches(df.repartition(3), ["g"], self.specs[:1])
-        tracker = spark.sparkContext.statusTracker()
-        jobs = len(tracker.getJobIdsForGroup())
-        assert _map_partitions(built) is None
-        assert len(tracker.getJobIdsForGroup()) == jobs  # ran nothing
-        # both merge levels (the repartition is a round-robin exchange)
-        assert self.exchanges(two_level_merge(built, ["g"])) == 2

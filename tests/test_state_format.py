@@ -220,3 +220,32 @@ def test_unknown_envelopes_fail_loudly(forge):
     for states in ([bad, good], [good, bad]):
         with pytest.raises(ValueError, match="unsupported sketch"):
             merge_many(states)
+
+
+def _damage(data: bytes, offset: int) -> bytes:
+    out = bytearray(data)
+    out[offset] ^= 0xFF
+    return bytes(out)
+
+
+@pytest.mark.parametrize("forge", [
+    lambda d: _forge(d, 8, "<Q", 2 ** 64 - 1),           # forged raw length
+    lambda d: _forge(d, 8, "<Q", struct.unpack_from("<Q", d, 8)[0] + 1),
+    lambda d: _forge(d, 16, "<I", struct.unpack_from("<I", d, 16)[0] ^ 1),
+    lambda d: _damage(d, 20),                             # zstd frame magic
+    lambda d: _damage(d, len(d) // 2),                    # frame body
+], ids=["huge_length", "wrong_length", "checksum", "frame_magic", "body"])
+def test_damaged_zstd_states_fail_loudly(forge):
+    good = partials()[0]["bloom"].to_bytes()
+    assert struct.unpack_from("<H", good, 6)[0] == FLAG_ZSTD
+    bad = forge(good)
+    with pytest.raises(ValueError, match="corrupt sketch state"):
+        sketch_from_bytes(bad)
+    with pytest.raises(ValueError, match="corrupt sketch state"):
+        merge_many([good, bad])
+
+
+def test_damaged_zlib_state_fails_loudly():
+    old = zlib_state(partials()[0]["bloom"])
+    with pytest.raises(ValueError, match="corrupt sketch state"):
+        sketch_from_bytes(_damage(old, len(old) - 2))  # adler32 trailer
