@@ -88,6 +88,21 @@ PAGE_SPECS = [
 ]
 
 
+# A streaming drain still running after this long is stopped and reported:
+# the bench's availableNow drains take tens of seconds, so waiting longer
+# only hides a hung query.
+DRAIN_TIMEOUT_S = 600
+
+
+def _await_drain(q, name: str) -> None:
+    """Wait for streaming query ``q`` to finish; on timeout stop it and
+    raise ``TimeoutError`` naming it."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"streaming drain {name!r} did not finish in "
+                           f"{DRAIN_TIMEOUT_S} s; stopped")
+
+
 def _materialize(df) -> int:
     """Force full execution; returns row count (cheap side metric)."""
     return df.count()
@@ -926,7 +941,7 @@ def bench_streaming(spark):
             q = (make_query(stream).writeStream.foreachBatch(_count)
                  .option("checkpointLocation", ck)
                  .trigger(availableNow=True).start())
-            q.awaitTermination()
+            _await_drain(q, name)
             wall = time.time() - t0
             stages[name] = {"wall_s": round(wall, 3),
                             "events_per_sec": round(s["n"] / wall, 1),
@@ -982,7 +997,7 @@ def bench_streaming(spark):
                 q = (st2.writeStream.foreachBatch(acc.process_batch)
                      .option("checkpointLocation", ck)
                      .trigger(availableNow=True).start())
-                q.awaitTermination()
+                _await_drain(q, tag)
                 wall = time.time() - t0
                 out_rows = (acc.merged_states(spark).count()  # untimed
                             if engine == "python_durable"
@@ -993,7 +1008,7 @@ def bench_streaming(spark):
                     watermark="2 minutes")
                 t0 = time.time()
                 q = start_jvm_sketch_sink(agg, out_dir, ck)
-                q.awaitTermination()
+                _await_drain(q, tag)
                 wall = time.time() - t0
                 out_rows = spark.read.parquet(out_dir).count()  # untimed
             stages[tag] = {"wall_s": round(wall, 3),

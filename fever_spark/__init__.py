@@ -19,3 +19,8 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+from fever_spark._worker import trim_zip_finders as _trim_zip_finders
+
+# inside a PySpark worker: stop re-reading module-free archives per task
+_trim_zip_finders()

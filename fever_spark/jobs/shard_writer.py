@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from fever_spark.operators.curation import pack_documents
@@ -41,7 +41,11 @@ def write_training_shards(spark: SparkSession, input_path: str,
     total docs/tokens, shard count, per-shard doc and token counts, and
     the ids of shards containing an over-budget document (a doc larger
     than ``budget`` is never split; its shard simply runs long —
-    flagged so a loader can decide to truncate or skip).
+    flagged so a loader can decide to truncate or skip). Raises
+    ``ValueError`` naming the duplicated ids when ``id_col`` is not
+    unique (or holds nulls): the write's own row count, observed on the
+    write job, then differs from the manifest's ``total_docs``. The shards
+    are written by then; the manifest is not.
 
     ``bpe_merges`` (a trained functions/bpe merge list) switches the
     budget from whitespace words to REAL tokenizer tokens: docs are
@@ -90,7 +94,11 @@ def write_training_shards(spark: SparkSession, input_path: str,
     out = (base.join(assign, pack_id)
            .drop("_ord")
            .repartition(F.col("shard")))
-    out.write.mode("overwrite").partitionBy("shard").parquet(output_path)
+    # the written row count rides the write job itself (no extra job); it
+    # checks the manifest below, which assumes one assign row per written row
+    written = Observation("shard_writer_rows")
+    (out.observe(written, F.count(F.lit(1)).alias("rows"))
+     .write.mode("overwrite").partitionBy("shard").parquet(output_path))
 
     # Per-shard doc/token counts and the over-budget flag come from the
     # packer's OWN (checkpointed) assignment frame (id → shard,
@@ -112,11 +120,22 @@ def write_training_shards(spark: SparkSession, input_path: str,
                  .orderBy("shard").collect())
     oversized = sorted(int(r["shard"]) for r in per_shard
                        if r["has_overbudget"])
+    total_docs = int(sum(r["docs"] for r in per_shard))
+    n_written = int(written.get["rows"])
+    if n_written != total_docs:
+        # a duplicated id joins each of its rows to each of its assign rows
+        dups = [r[0] for r in docs.groupBy(id_col).count()
+                .filter(F.col("count") > 1).orderBy(id_col).limit(10)
+                .collect()]
+        raise ValueError(
+            f"wrote {n_written} rows for {total_docs} packed documents: "
+            f"{id_col!r} must be unique and non-null; duplicate ids "
+            f"(first 10): {dups}")
     manifest = {
         "input": input_path, "output": output_path,
         "budget_tokens": int(budget),
         "n_shards": len(per_shard),
-        "total_docs": int(sum(r["docs"] for r in per_shard)),
+        "total_docs": total_docs,
         "total_tokens": int(sum(r["tokens"] for r in per_shard)),
         "shards": [{"shard": int(r["shard"]), "docs": int(r["docs"]),
                     "tokens": int(r["tokens"])} for r in per_shard],

@@ -294,16 +294,43 @@ def jvm_rollup_sketches(df: DataFrame, ts_col: str, keys: list[str],
 def recommend_engine(specs: list[SketchSpec],
                      parallelism: int | None = None,
                      need_state_product: bool = False) -> str:
-    """'jvm' or 'python' — the measured crossover rule as code (numbers
-    from bench.py engine_ab at 10M pages, BENCH/BASELINE.md round 8).
+    """'jvm' or 'python' for one sketch build — the measured crossover
+    rule as code. The rule is unchanged since round 8; its reasons are
+    the two mechanisms below.
 
-    python whenever the STATE is the product (checkpointed daemon stats,
-    sketchctl, cross-job merge_many — pass need_state_product=True) or
-    any kind lacks a JVM aggregate (kll/tdigest/kmv/bloom/cmstopk,
-    weighted cms). Otherwise: hll-only → jvm at any core count (5.3-7.1x
-    measured); hll+cms bundles → jvm at >=16 cores (3.2x at 32; a tie at
-    8, where one Python boundary crossing amortizes across all sketches
-    while JVM aggregates pay per-row per-aggregate)."""
+    Both engines pay the same per-job or per-trigger floor (Spark's job
+    scheduling, state-store and sink commits); the Python engine adds one
+    JVM→Python boundary crossing per stage, the JVM engine one aggregate
+    per sketch per row. So which wins depends on how many rows each job
+    or trigger carries, and on whether the product must be a durable
+    state:
+
+    - python whenever the STATE is the product (checkpointed daemon
+      stats, sketchctl, cross-job ``merge_many`` — pass
+      ``need_state_product=True``) or any kind lacks a JVM aggregate
+      (kll/tdigest/kmv/bloom/cmstopk, weighted cms, hll p outside 4..21);
+    - hll-only → jvm at any core count (5.3-7.1x measured at 10M pages
+      per job, bench.py engine_ab, BENCH/BASELINE.md round 8): there the
+      boundary cost, which grows with the rows, dwarfs the shared floor;
+    - hll+cms bundles → jvm at >=16 cores or unknown parallelism (3.2x
+      at 32), python below (a tie at 8: one boundary crossing amortizes
+      across all sketches while JVM aggregates pay per row per
+      aggregate).
+
+    Streaming has no separate rule here. At ~62.5k rows per trigger the
+    shared per-trigger floor dominates: OPTIMIZATION_r09.md §8's
+    six-round clean-window table has the python accumulator at 77-87k
+    ev/s (durable: 70-78k) against the JVM state store at 57-63k over
+    8-trigger drains. The JVM path's edge appears only as rows per
+    trigger grow, or when a durable committed sink is required — its
+    append-mode file sink commits inside the engine, where the python
+    accumulator holds state in a driver dict unless given a state_dir.
+    Since those runs the per-Python-stage floor has fallen (before each
+    task a worker now re-reads only the root of each importable archive,
+    not Spark's core jar and every imported package; see
+    ``fever_spark._worker``), which moves both crossovers towards
+    python; the rule has not been re-measured since.
+    """
     if need_state_product:
         return "python"
     for s in specs:

@@ -331,6 +331,7 @@ def test_recommend_engine_rule():
     assert recommend_engine(hll) == "jvm"
     assert recommend_engine(hll, parallelism=2) == "jvm"
     assert recommend_engine(bundle, parallelism=32) == "jvm"
+    assert recommend_engine(bundle, parallelism=16) == "jvm"
     assert recommend_engine(bundle, parallelism=8) == "python"
     assert recommend_engine(bundle) == "jvm"  # unknown cores -> big-job rule
     # state-as-product and non-JVM kinds always route python
@@ -338,6 +339,8 @@ def test_recommend_engine_rule():
     assert recommend_engine([SketchSpec("q", "kll", "x")]) == "python"
     assert recommend_engine(
         [SketchSpec("w", "cms", "x", weight_column="n")]) == "python"
+    assert recommend_engine(
+        [SketchSpec("u", "hll", "x", {"p": 22})]) == "python"
 
 
 class TestJvmRollupValidation:

@@ -3,6 +3,7 @@ shard per bin with a manifest; totals conserve, oversized docs flagged."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fever_spark.jobs.shard_writer import write_training_shards
@@ -158,3 +159,18 @@ def test_shuffled_packing(spark, tmp_path):
     assert set(sizes.values()) == {5}
     # the internal order key never leaks into the written schema
     assert "_ord" not in spark.read.parquet(out_a).columns
+
+
+def test_duplicate_ids_fail_loudly(spark, tmp_path):
+    """A duplicated id joins each of its rows to each of its assignments,
+    so the write holds more rows than the manifest counts: the written
+    count observed on the write job catches it and names the ids."""
+    import pytest
+
+    rows = [(i, "a b c") for i in range(6)] + [(3, "d e"), (5, "f")]
+    src = str(tmp_path / "src_dup")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
+    out = str(tmp_path / "sh_dup")
+    with pytest.raises(ValueError, match=r"duplicate ids .*: \[3, 5\]"):
+        write_training_shards(spark, src, out, budget=5, n_buckets=2)
+    assert not os.path.exists(os.path.join(out, "_shards_manifest.json"))
