@@ -22,5 +22,5 @@ __version__ = "0.1.0"
 
 from fever_spark._worker import trim_zip_finders as _trim_zip_finders
 
-# inside a PySpark worker: stop re-reading module-free archives per task
+# inside a PySpark worker: stop the per-task re-reads of zip archives
 _trim_zip_finders()

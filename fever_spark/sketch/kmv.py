@@ -164,6 +164,9 @@ def kmv_intersection_estimate(a: KMVSketch, b: KMVSketch) -> float:
         return 0.0
     in_both = (np.isin(union.hashes, a.hashes)
                & np.isin(union.hashes, b.hashes))
+    if len(union.hashes) < union.k:
+        # exact regime: J × |A ∪ B| would round (13/N × N → 12.999…)
+        return float(in_both.sum())
     return float(in_both.sum() / len(union.hashes)) * union.estimate()
 
 
